@@ -19,9 +19,10 @@ import graft.sources._
   *
   * Single-input mode (main.go:parseFileWithCustomOutput): a file or a
   * directory (lexical order, subdirectories skipped) runs each payload
-  * through the SAME aggregate→forensic→smtp_tls parser chain
-  * (main.go:parseAndWriteOutput) and writes the reference's exact
-  * output bytes ([[graft.sources.ReportJson]]): stream JSON/CSV to
+  * through the shared aggregate→forensic→smtp_tls parser chain
+  * ([[graft.sources.ParsedReport.parseAny]], main.go:parseAndWriteOutput)
+  * and writes the reference's exact output bytes
+  * ([[graft.sources.ReportJson]]): stream JSON/CSV to
   * stdout or an append-file, or per-report files in directory mode
   * (output.go DirectoryJSONWriter/DirectoryCSVWriter filenames).
   * A file that parses as no family logs a warning and processing
@@ -107,28 +108,6 @@ object GraftCli {
     }
     Right(opts)
   }
-
-  // ------------------------------------------------------ parse chain
-  sealed trait ParsedReport
-  final case class ParsedAggregate(r: AggregateReport) extends ParsedReport
-  final case class ParsedForensic(r: ForensicReport) extends ParsedReport
-  final case class ParsedTls(r: TlsReport) extends ParsedReport
-
-  /** main.go:parseAndWriteOutput's chain: aggregate first, then
-    * forensic, then SMTP TLS; the combined error joins all three.
-    */
-  def parseAny(data: Array[Byte]): Either[String, ParsedReport] =
-    AggregateXmlParser.parseAny(data).map(ParsedAggregate(_): ParsedReport)
-      .left.flatMap { aggErr =>
-        ForensicParser.parse(data).map(ParsedForensic(_): ParsedReport)
-          .left.flatMap { forErr =>
-            TlsReportParser.parseAny(data).map(ParsedTls(_): ParsedReport)
-              .left.map { tlsErr =>
-                "unable to parse data as any supported report type. " +
-                  s"Details: aggregate: $aggErr; forensic: $forErr; smtp_tls: $tlsErr"
-              }
-          }
-      }
 
   // ------------------------------------------------------ sinks
   /** output.Writer twin: one sink per (destination, format). */
@@ -237,37 +216,12 @@ object GraftCli {
     }
   }
 
-  /** The per-report document bytes for a format — ONE definition
-    * shared by the directory sink AND the o_cli_json/o_cli_csv
-    * distributed gate entries (DmarcIngest.cliDocs), so the CLI's
-    * actual output and its hash gate cannot drift apart. JSON: the
-    * MarshalIndent document; CSV: the per-file header + rows
-    * (identical to the stream layout — output.go:616-700's directory
-    * headers are the same columns).
-    */
-  def renderDocument(p: ParsedReport, format: String): String =
-    if (format == "json") p match {
-      case ParsedAggregate(r) => ReportJson.aggregate(r)
-      case ParsedForensic(r)  => ReportJson.forensic(r)
-      case ParsedTls(r)       => ReportJson.smtpTls(r)
-    } else p match {
-      case ParsedAggregate(r) =>
-        (ReportJson.csvLine(ReportJson.AggregateCsvHeader) +:
-          ReportJson.aggregateCsvRows(r).map(ReportJson.csvLine)).mkString
-      case ParsedForensic(r) =>
-        ReportJson.csvLine(ReportJson.ForensicCsvHeader) +
-          ReportJson.csvLine(ReportJson.forensicCsvRow(r))
-      case ParsedTls(r) =>
-        (ReportJson.csvLine(ReportJson.TlsCsvHeader) +:
-          ReportJson.tlsCsvRows(r).map(ReportJson.csvLine)).mkString
-    }
-
   /** Stream JSON (output.go JSONWriter): the indented document plus a
     * trailing newline, appended per report.
     */
   final class StreamJsonSink(out: Appendable) extends ReportSink {
     def write(p: ParsedReport): Unit = {
-      out.append(renderDocument(p, "json")).append('\n')
+      out.append(ReportJson.renderDocument(p, "json")).append('\n')
       ()
     }
   }
@@ -313,7 +267,7 @@ object GraftCli {
         case ParsedTls(r) =>
           ReportJson.directoryFilename("smtp_tls", r.reportId, r.beginDate, format)
       }
-      Files.write(dir.resolve(name), renderDocument(p, format).getBytes("UTF-8"))
+      Files.write(dir.resolve(name), ReportJson.renderDocument(p, format).getBytes("UTF-8"))
       ()
     }
   }
@@ -362,7 +316,8 @@ object GraftCli {
       // (permissions, transient IO) must warn-and-continue exactly
       // like an unparseable one (main.go:283-287)
       val result =
-        try parseAny(Files.readAllBytes(f))
+        try ParsedReport.parseAny(Files.readAllBytes(f)).left.map(reasons =>
+          s"unable to parse data as any supported report type. Details: $reasons")
         catch { case NonFatal(e) => Left(e.toString) }
       result match {
         case Right(parsed) => sink.write(parsed); ok += 1

@@ -10,10 +10,12 @@ import org.apache.spark.sql.functions._
   */
 object DmarcIngest extends QueryModule {
 
-  /** Reference sample-corpus root — the single definition every module
-    * and spec reading the read-only reference checkout goes through.
+  /** Read-only reference checkout and its sample corpus — the single
+    * definitions every module and spec reading the reference goes
+    * through, so moving the corpus changes one line.
     */
-  private[graft] val Samples = "/root/reference/samples"
+  private[graft] val Reference = "/root/reference"
+  private[graft] val Samples = s"$Reference/samples"
 
   override def entries: Seq[QueryDef] = Seq(
     QueryDef(
@@ -353,12 +355,12 @@ object DmarcIngest extends QueryModule {
     ),
     // CLI output surface (cmd/parsedmarc-go/main.go + internal/output/
     // output.go): every sample-corpus file runs the CLI's parse chain
-    // and byte-faithful serializers (ReportJson — Go MarshalIndent /
-    // encoding/csv twins) ON EXECUTORS over a distributed binaryFile
-    // scan; the frame pins each emitted document's sha256, so the gate
-    // hash-checks the exact bytes a reference user's `-format json`
-    // run would produce. GraftCliSpec pins full golden documents and
-    // the flag/daemon semantics.
+    // (ParsedReport.parseAny) and byte-faithful serializers (ReportJson
+    // — Go MarshalIndent / encoding/csv twins) ON EXECUTORS over a
+    // distributed binaryFile scan; the frame pins each emitted
+    // document's sha256, so the gate hash-checks the exact bytes a
+    // reference user's `-format json` run would produce. The CLI's spec
+    // pins full golden documents and the flag/daemon semantics.
     QueryDef(
       "o_cli_json",
       (s, _) => {
@@ -387,29 +389,18 @@ object DmarcIngest extends QueryModule {
   private def cliDocs(s: org.apache.spark.sql.SparkSession, format: String):
       org.apache.spark.sql.Dataset[(String, String, String, Int)] = {
     import s.implicits._
-    import graft.GraftCli
-    import graft.sources.ReportJson
-    s.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .load(Samples)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .map { case (path, bytes) =>
-        val rel = path.substring(path.indexOf("/samples/") + "/samples/".length)
-        def family(p: GraftCli.ParsedReport): String = p match {
-          case GraftCli.ParsedAggregate(_) => "aggregate"
-          case GraftCli.ParsedForensic(_)  => "forensic"
-          case GraftCli.ParsedTls(_)       => "smtp_tls"
-        }
-        GraftCli.parseAny(bytes) match {
-          case Right(p) =>
-            // the CLI's own renderer — gate and CLI cannot drift
-            val d = GraftCli.renderDocument(p, format)
-            val sha = java.security.MessageDigest.getInstance("SHA-256")
-              .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-            (rel, family(p), sha, d.length)
-          case Left(_) => (rel, "error", "", 0)
-        }
-      }
+    import graft.sources.{ParsedReport, ReportJson}
+    DmarcReader.parse(DmarcReader.files(s, Samples)) { f =>
+      val rel = f.path.substring(f.path.indexOf("/samples/") + "/samples/".length)
+      Some(ParsedReport.parseAny(f.content) match {
+        case Right(p) =>
+          // the CLI's own renderer — gate and CLI cannot drift
+          val d = ReportJson.renderDocument(p, format)
+          val sha = java.security.MessageDigest.getInstance("SHA-256")
+            .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
+          (rel, p.family, sha, d.length)
+        case Left(_) => (rel, "error", "", 0)
+      })
+    }
   }
 }

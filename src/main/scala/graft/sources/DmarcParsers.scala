@@ -22,8 +22,10 @@ object AggregateXmlParser {
   private def epoch(s: String): Option[Timestamp] =
     Try(new Timestamp(s.trim.toLong * 1000L)).toOption
 
-  def parse(data: Array[Byte]): Either[String, AggregateReport] = {
-    val raw = Extract.utf8(Extract.decompress(data))
+  def parse(data: Array[Byte]): Either[String, AggregateReport] =
+    Extract.decode(data).flatMap(parseXml)
+
+  private def parseXml(raw: String): Either[String, AggregateReport] = {
     val start = raw.indexOf("<feedback>")
     val end = raw.lastIndexOf("</feedback>")
     val xmlStr =
@@ -111,8 +113,8 @@ object AggregateXmlParser {
     * (xml / gzip / zip payloads, base64 transfer encoding) — the path of
     * parser.go:392-628.
     */
-  def parseEmail(data: Array[Byte]): Either[String, AggregateReport] = {
-    val msg = Mime.parseMessage(Extract.utf8(data))
+  private def parseEmail(text: String): Either[String, AggregateReport] = {
+    val msg = Mime.parseMessage(text)
     val candidates = msg.flatten.filterNot(_.isMultipart)
     val hit = candidates.iterator.flatMap { part =>
       val ct = part.contentType
@@ -127,13 +129,53 @@ object AggregateXmlParser {
     hit.headOption.toRight("no aggregate report found in email")
   }
 
-  /** Bytes → report, auto-detecting raw XML vs compressed vs email. */
-  def parseAny(data: Array[Byte]): Either[String, AggregateReport] = {
-    val body = Extract.decompress(data)
-    val text = Extract.utf8(body)
-    if (text.contains("<feedback")) parse(body)
-    else parseEmail(data)
-  }
+  /** Bytes → report, auto-detecting raw XML vs compressed vs email.
+    * The payload is decompressed and decoded once; both branches parse
+    * the decoded text.
+    */
+  def parseAny(data: Array[Byte]): Either[String, AggregateReport] =
+    Extract.decode(data).flatMap(parseText)
+
+  private[sources] def parseText(text: String): Either[String, AggregateReport] =
+    if (text.contains("<feedback")) parseXml(text) else parseEmail(text)
+}
+
+/** One parsed report of any family, labelled with the family name the
+  * CLI, the HTTP intake and the registry all report.
+  */
+sealed trait ParsedReport { def family: String }
+final case class ParsedAggregate(r: AggregateReport) extends ParsedReport {
+  def family: String = "aggregate"
+}
+final case class ParsedForensic(r: ForensicReport) extends ParsedReport {
+  def family: String = "forensic"
+}
+final case class ParsedTls(r: TlsReport) extends ParsedReport {
+  def family: String = "smtp_tls"
+}
+
+object ParsedReport {
+
+  /** main.go:parseAndWriteOutput's chain (server.go's parser.ParseData):
+    * aggregate first, then forensic, then SMTP TLS; the error joins all
+    * three reasons, and the CLI prefixes its own sentence to it. The one
+    * format-detecting parse behind every intake: the CLI, the HTTP
+    * server and the registry's CLI-document entries. A compressed
+    * payload that does not decompress belongs to no family and stops
+    * the chain with that reason: the forensic parser's plain-text
+    * fallback would otherwise take its raw bytes for a report.
+    */
+  def parseAny(data: Array[Byte]): Either[String, ParsedReport] =
+    Extract.decode(data).flatMap { text =>
+      AggregateXmlParser.parseText(text).map(ParsedAggregate(_): ParsedReport)
+        .left.flatMap { aggErr =>
+          ForensicParser.parse(data).map(ParsedForensic(_): ParsedReport)
+            .left.flatMap { forErr =>
+              TlsReportParser.parseAny(data).map(ParsedTls(_): ParsedReport)
+                .left.map(tlsErr => s"aggregate: $aggErr; forensic: $forErr; smtp_tls: $tlsErr")
+            }
+        }
+    }
 }
 
 /** Forensic / failure reports (RFC 6591 ARF). Mirrors the field map and

@@ -1,7 +1,14 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import java.sql.Timestamp
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.types._
+
+/** One report payload as Spark's `binaryFile` source delivers it: where
+  * it came from, when it arrived, its bytes.
+  */
+final case class ReportFile(path: String, modificationTime: Timestamp, content: Array[Byte])
 
 /** Distributed DMARC report ingestion: `binaryFile` scan → executor-side
   * parse → typed Dataset. This is the reference's single-threaded
@@ -10,35 +17,75 @@ import org.apache.spark.sql.functions._
   * archives ingest at cluster width. Failed files surface in a parallel
   * errors Dataset instead of aborting the job (the reference logs and
   * skips — parser.go:116-193).
+  *
+  * Every intake loads and parses through the functions below: [[files]]
+  * (batch) and [[fileStream]] (streaming) are the only `binaryFile`
+  * loaders, and [[parse]] turns either kind of frame — or a frame of
+  * fetched mail — into a typed Dataset. Batch and streaming
+  * Datasets share one API, so the batch reader, the drop-directory
+  * stream, the IMAP intake, the archive audit and the ingest metrics
+  * all run the same parse.
   */
 object DmarcReader {
 
-  private def files(spark: SparkSession, path: String, glob: String): DataFrame =
+  /** The report files under `path` (recursive), as a batch frame. */
+  def files(spark: SparkSession, path: String, glob: String = "*"): DataFrame =
     spark.read.format("binaryFile")
       .option("pathGlobFilter", glob)
       .option("recursiveFileLookup", "true")
       .load(path)
-      .select(col("path"), col("content"))
 
-  def aggregateReports(spark: SparkSession, path: String, glob: String = "*"): Dataset[AggregateReport] = {
-    import spark.implicits._
-    files(spark, path, glob).as[(String, Array[Byte])]
-      .flatMap { case (_, bytes) => AggregateXmlParser.parseAny(bytes).toOption }
-  }
+  /** binaryFile's fixed schema (streaming sources require it up front). */
+  private val binarySchema = StructType(Seq(
+    StructField("path", StringType),
+    StructField("modificationTime", TimestampType),
+    StructField("length", LongType),
+    StructField("content", BinaryType)))
+
+  /** Report files as they arrive in `dir`, as a streaming frame of at
+    * most 64 files per micro-batch (backpressure for a burst of drops).
+    */
+  def fileStream(spark: SparkSession, dir: String, glob: String = "*"): DataFrame =
+    spark.readStream.format("binaryFile")
+      .schema(binarySchema)
+      .option("pathGlobFilter", glob)
+      .option("maxFilesPerTrigger", "64")
+      .load(dir)
+
+  /** A (path, modificationTime, content) frame, batch or streaming,
+    * through `f` on the executors: each file yields zero or more rows.
+    */
+  def parse[T: Encoder](files: DataFrame)(f: ReportFile => IterableOnce[T]): Dataset[T] =
+    files.as[ReportFile](Encoders.product[ReportFile]).flatMap(f)
+
+  /** The files that parse as aggregate reports; the rest are skipped. */
+  def parseAggregates(files: DataFrame): Dataset[AggregateReport] =
+    parse(files)(f => AggregateXmlParser.parseAny(f.content).toOption)(Encoders.product)
+
+  /** The files that parse as forensic (ARF) reports. */
+  def parseForensic(files: DataFrame): Dataset[ForensicReport] =
+    parse(files)(f => ForensicParser.parse(f.content).toOption)(Encoders.product)
+
+  /** The files that parse as SMTP TLS reports. */
+  def parseTls(files: DataFrame): Dataset[TlsReport] =
+    parse(files)(f => TlsReportParser.parseAny(f.content).toOption)(Encoders.product)
+
+  /** Flattened record rows of the files that parse as aggregate reports. */
+  def parseRecords(files: DataFrame): Dataset[AggregateRecordRow] =
+    parseAggregates(files).flatMap(recordRows)(Encoders.product)
+
+  def aggregateReports(spark: SparkSession, path: String, glob: String = "*"): Dataset[AggregateReport] =
+    parseAggregates(files(spark, path, glob))
 
   /** Flattened `dmarc_aggregate_records` rows — the table every overview
-    * dashboard panel aggregates (clickhouse.go:107-138). On a cluster
-    * this would persist as parquet partitioned by month(begin_date),
-    * sorted within partitions by (org_name, source_ip_address).
+    * dashboard panel aggregates (clickhouse.go:107-138). The stored
+    * layout (month partitions, files sorted on (org_name, report_id,
+    * source_ip_address, begin_date)) is `OutputWriters.writeRecordsTable`.
     */
-  def aggregateRecords(spark: SparkSession, path: String, glob: String = "*"): Dataset[AggregateRecordRow] = {
-    import spark.implicits._
-    aggregateReports(spark, path, glob).flatMap(recordRows)
-  }
+  def aggregateRecords(spark: SparkSession, path: String, glob: String = "*"): Dataset[AggregateRecordRow] =
+    parseRecords(files(spark, path, glob))
 
-  /** Report → flattened per-record rows; shared by the batch reader above
-    * and the streaming drop-directory intake (ReportFileIntake).
-    */
+  /** Report → flattened per-record rows (the flatten of [[parseRecords]]). */
   def recordRows(rep: AggregateReport): Seq[AggregateRecordRow] =
     rep.records.map { r =>
       AggregateRecordRow(
@@ -80,11 +127,8 @@ object DmarcReader {
     graft.functions.GeoEnrichment.enrich(
       aggregateRecords(spark, path, glob).toDF(), "source_ip_address")
 
-  def forensicReports(spark: SparkSession, path: String, glob: String = "*"): Dataset[ForensicReport] = {
-    import spark.implicits._
-    files(spark, path, glob).as[(String, Array[Byte])]
-      .flatMap { case (_, bytes) => ForensicParser.parse(bytes).toOption }
-  }
+  def forensicReports(spark: SparkSession, path: String, glob: String = "*"): Dataset[ForensicReport] =
+    parseForensic(files(spark, path, glob))
 
   /** Forensic reports with the deterministic geo/rDNS enrichment applied
     * to `source` (the forensic twin of `enrichedRecords` — without it
@@ -95,18 +139,14 @@ object DmarcReader {
     graft.functions.GeoEnrichment.enrichForensic(
       forensicReports(spark, path, glob).toDF())
 
-  def tlsReports(spark: SparkSession, path: String, glob: String = "*"): Dataset[TlsReport] = {
-    import spark.implicits._
-    files(spark, path, glob).as[(String, Array[Byte])]
-      .flatMap { case (_, bytes) => TlsReportParser.parseAny(bytes).toOption }
-  }
+  def tlsReports(spark: SparkSession, path: String, glob: String = "*"): Dataset[TlsReport] =
+    parseTls(files(spark, path, glob))
 
   /** (path, error) for files that fail to parse as aggregate reports. */
   def aggregateErrors(spark: SparkSession, path: String, glob: String = "*"): Dataset[(String, String)] = {
     import spark.implicits._
-    files(spark, path, glob).as[(String, Array[Byte])]
-      .flatMap { case (p, bytes) =>
-        AggregateXmlParser.parseAny(bytes).left.toOption.map(p -> _)
-      }
+    parse(files(spark, path, glob)) { f =>
+      AggregateXmlParser.parseAny(f.content).left.toOption.map(f.path -> _)
+    }
   }
 }

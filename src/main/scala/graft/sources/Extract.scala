@@ -4,6 +4,8 @@ import java.io.ByteArrayInputStream
 import java.nio.charset.StandardCharsets
 import java.util.zip.{GZIPInputStream, ZipInputStream}
 
+import scala.util.Try
+
 /** Payload extraction: gzip / zip / raw auto-detection by magic bytes,
   * plus base64 decode — the pipeline the reference applies to report
   * attachments (/root/reference/internal/parser/parser.go:255-356).
@@ -44,6 +46,13 @@ object Extract {
     java.util.Base64.getMimeDecoder.decode(s.trim)
 
   def utf8(b: Array[Byte]): String = new String(b, StandardCharsets.UTF_8)
+
+  /** Decompressed UTF-8 text of a payload, or why it could not be
+    * decompressed: a gzip/zip with valid magic bytes and a corrupt body
+    * is a bad input, not an exception inside an executor's flatMap.
+    */
+  def decode(b: Array[Byte]): Either[String, String] =
+    Try(utf8(decompress(b))).toEither.left.map(e => s"invalid compressed data: $e")
 }
 
 /** Minimal MIME multipart walker — enough to locate report attachments in

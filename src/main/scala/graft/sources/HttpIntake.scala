@@ -108,18 +108,6 @@ final class HttpIntake(cfg: HttpConfig, dropDir: String,
     }
   }
 
-  /** The parser.ParseData contract: auto-detect and parse with the same
-    * parser chain every other intake uses; Left(reason) on failure.
-    */
-  private def parseData(body: Array[Byte]): Either[String, String] =
-    AggregateXmlParser.parseAny(body).map(_ => "aggregate").left.flatMap { aggErr =>
-      ForensicParser.parse(body).map(_ => "forensic").left.flatMap { forErr =>
-        TlsReportParser.parseAny(body).map(_ => "smtp_tls").left.map { tlsErr =>
-          s"aggregate: $aggErr; forensic: $forErr; smtp_tls: $tlsErr"
-        }
-      }
-    }
-
   private def sha(b: Array[Byte]): String =
     MessageDigest.getInstance("SHA-256").digest(b).take(12).map("%02x".format(_)).mkString
 
@@ -174,16 +162,17 @@ final class HttpIntake(cfg: HttpConfig, dropDir: String,
       return
     }
     val tpe = detectReportType(body, ct)
-    parseData(body) match {
+    // the parser.ParseData contract: the shared format-detecting chain
+    ParsedReport.parseAny(body) match {
       case Left(err) =>
         failedMetric(tpe, "parse_failed")
         respond(x, 400, s"""{"error":"Failed to parse DMARC report","details":"${err.replace("\"", "'").take(200)}"}""")
-      case Right(parsedType) =>
+      case Right(parsed) =>
         // land the validated payload in the streaming intake's drop
         // directory — downstream parse/flatten/store is the SAME
         // checkpointed stream the mailbox path feeds
-        Files.write(Paths.get(dropDir, s"http-$parsedType-${sha(body)}.report"), body)
-        processedMetric(parsedType)
+        Files.write(Paths.get(dropDir, s"http-${parsed.family}-${sha(body)}.report"), body)
+        processedMetric(parsed.family)
         respond(x, 200, """{"message":"DMARC report processed successfully"}""")
     }
   }

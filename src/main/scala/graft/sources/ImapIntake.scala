@@ -277,16 +277,16 @@ object ImapIntake {
   }
 
   /** Flatten fetched messages to aggregate record rows on the CLUSTER:
-    * the message bytes become a Dataset and run the same executor-side
-    * parser chain as the batch/file paths (parseAny handles the MIME
-    * walk, attachment decode, and decompression), so IMAP intake can
-    * never drift from file intake.
+    * the message bytes become a frame of report files and run the same
+    * executor-side parse as the batch/file paths (parseAny handles the
+    * MIME walk, attachment decode, and decompression), so IMAP intake
+    * can never drift from file intake.
     */
   def aggregateRecords(spark: SparkSession,
                        messages: Seq[FetchedMessage]): Dataset[AggregateRecordRow] = {
     import spark.implicits._
-    spark.createDataset(messages.map(_.rfc822))
-      .flatMap(b => AggregateXmlParser.parseAny(b).toOption.toSeq.flatMap(DmarcReader.recordRows))
+    DmarcReader.parseRecords(spark.createDataset(messages.map(m =>
+      ReportFile(s"imap:${m.seq}", new java.sql.Timestamp(0L), m.rfc822))).toDF())
   }
 
   /** Wrap a raw report payload as the multipart message a reporting org

@@ -3,128 +3,14 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-/** Output surface mirroring the reference's writers
-  * (/root/reference/internal/output/output.go): JSON and CSV with the
-  * same per-record field layout, plus directory mode (one partition tree
-  * instead of one file per report — the Spark-native equivalent).
+/** The stored tables: the five ClickHouse MergeTree tables of the
+  * reference (clickhouse.go:79-228) as month-partitioned parquet, plus
+  * the column projections its HTTP output path inserts. The CLI's
+  * JSON/CSV documents (output.go) have one layout, [[ReportJson]].
   * Kafka/SMTP delivery is transport, not computation; on Spark the same
   * DataFrames feed writeStream sinks.
   */
 object OutputWriters {
-
-  /** First auth result or "" — getDKIMDomain/getSPFDomain semantics
-    * (output.go:497-524); try_element_at because empty is legitimate.
-    */
-  private def first1(c: org.apache.spark.sql.Column) =
-    coalesce(try_element_at(c, lit(1)), lit(""))
-
-  /** The aggregate CSV row layout of output.go:265-273 (first dkim/spf
-    * auth result flattened, RFC 3339 dates, booleans as true/false).
-    */
-  def aggregateCsvLayout(records: Dataset[AggregateRecordRow], reports: Dataset[AggregateReport]): DataFrame = {
-    val reps = reports.toDF().select(
-      col("reportId").as("r_id"), col("orgEmail"),
-      date_format(col("beginDate"), "yyyy-MM-dd'T'HH:mm:ss'Z'").as("r_begin"),
-      date_format(col("endDate"), "yyyy-MM-dd'T'HH:mm:ss'Z'").as("r_end"),
-      col("domain"), col("adkim").as("policy_adkim"), col("aspf").as("policy_aspf"),
-      col("p").as("policy_p"), col("sp").as("policy_sp"), col("pct").as("policy_pct"))
-    records.toDF()
-      .join(reps, col("report_id") === col("r_id"))
-      .select(
-        col("report_id"), col("org_name"), col("orgEmail").as("org_email"),
-        col("r_begin").as("begin_date"), col("r_end").as("end_date"), col("domain"),
-        col("policy_adkim"), col("policy_aspf"), col("policy_p"),
-        col("policy_sp"), col("policy_pct"),
-        col("source_ip_address").as("source_ip"), col("source_country"),
-        col("source_reverse_dns"), col("count"), col("disposition"),
-        first1(col("dkim_results")).as("dkim_result"),
-        first1(col("spf_results")).as("spf_result"),
-        col("dmarc_aligned"), col("header_from"), col("envelope_from"),
-        first1(col("dkim_domains")).as("dkim_domain"),
-        first1(col("dkim_selectors")).as("dkim_selector"),
-        first1(col("spf_domains")).as("spf_domain"))
-  }
-
-  /** Forensic CSV layout (output.go:334-398): RFC3339 arrival date,
-    * auth_failure ";"-joined, optional fields as empty strings.
-    */
-  def forensicCsvLayout(forensic: Dataset[ForensicReport]): DataFrame =
-    forensic.toDF().select(
-      col("feedbackType").as("feedback_type"),
-      coalesce(col("userAgent"), lit("")).as("user_agent"),
-      coalesce(col("version"), lit("")).as("version"),
-      coalesce(col("originalEnvelopeId"), lit("")).as("original_envelope_id"),
-      coalesce(col("originalMailFrom"), lit("")).as("original_mail_from"),
-      coalesce(col("originalRcptTo"), lit("")).as("original_rcpt_to"),
-      date_format(col("arrivalDate"), "yyyy-MM-dd'T'HH:mm:ss'Z'").as("arrival_date"),
-      col("subject"), col("messageId").as("message_id"),
-      col("authenticationResults").as("authentication_results"),
-      coalesce(col("dkimDomain"), lit("")).as("dkim_domain"),
-      col("source.ipAddress").as("source_ip"),
-      col("source.country").as("source_country"),
-      col("deliveryResult").as("delivery_result"),
-      array_join(col("authFailure"), ";").as("auth_failure"),
-      col("reportedDomain").as("reported_domain"))
-
-  /** SMTP TLS CSV layout (output.go:399-462): one row per policy, or one
-    * per failure detail when present — exactly the reference's explode.
-    */
-  def tlsCsvLayout(reports: Dataset[TlsReport]): DataFrame = {
-    val base = reports.toDF().select(
-      col("organizationName").as("organization_name"),
-      date_format(col("beginDate"), "yyyy-MM-dd'T'HH:mm:ss'Z'").as("begin_date"),
-      date_format(col("endDate"), "yyyy-MM-dd'T'HH:mm:ss'Z'").as("end_date"),
-      col("contactInfo").as("contact_info"),
-      col("reportId").as("report_id"),
-      explode(col("policies")).as("policy"))
-    base.select(
-      col("organization_name"), col("begin_date"), col("end_date"),
-      col("contact_info"), col("report_id"),
-      col("policy.policyDomain").as("policy_domain"),
-      col("policy.policyType").as("policy_type"),
-      col("policy.successfulSessionCount").as("successful_session_count"),
-      col("policy.failedSessionCount").as("failed_session_count"),
-      // empty failure list → one row of empty strings (reference base row)
-      explode(when(size(col("policy.failureDetails")) === 0,
-          array(struct(lit("").as("resultType"),
-                       lit("").as("sendingMtaIp"),
-                       lit("").as("receivingIp"))))
-        .otherwise(expr(
-          "transform(policy.failureDetails, f -> struct(f.resultType AS resultType, coalesce(f.sendingMtaIp, '') AS sendingMtaIp, coalesce(f.receivingIp, '') AS receivingIp))")))
-        .as("f"))
-      .select(col("organization_name"), col("begin_date"), col("end_date"),
-        col("contact_info"), col("report_id"), col("policy_domain"),
-        col("policy_type"), col("successful_session_count"),
-        col("failed_session_count"),
-        col("f.resultType").as("failure_result_type"),
-        col("f.sendingMtaIp").as("failure_sending_mta_ip"),
-        col("f.receivingIp").as("failure_receiving_ip"))
-  }
-
-  /** File mode: single CSV with header (coalesced like the reference's
-    * one-file output; on a cluster drop the coalesce).
-    */
-  def writeCsv(df: DataFrame, path: String, singleFile: Boolean = true): Unit = {
-    val out = if (singleFile) df.coalesce(1) else df
-    out.write.mode("overwrite").option("header", "true").csv(path)
-  }
-
-  /** JSON lines (the reference writes a JSON document per report; JSONL
-    * is the distributed-friendly equivalent).
-    */
-  def writeJson(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
-
-  /** Directory mode: reference writes one timestamped file per report
-    * (output.go:867-905); the scalable analogue partitions by report
-    * month + org so each report lands in its own directory subtree.
-    */
-  def writeDirectoryMode(records: Dataset[AggregateRecordRow], path: String): Unit =
-    records.toDF()
-      .withColumn("report_month", date_format(col("begin_date"), "yyyyMM"))
-      .write.mode("overwrite")
-      .partitionBy("report_month", "org_name")
-      .parquet(path)
 
   /** The analytics TABLE layout — MergeTree parity with
     * `dmarc_aggregate_records` (clickhouse.go:107-138: PARTITION BY
@@ -177,9 +63,9 @@ object OutputWriters {
 
   /** `dmarc_forensic_reports` layout (clickhouse.go:175-176: ORDER BY
     * (arrival_date, source_ip_address), PARTITION BY month). The month
-    * partition derives from the TYPED arrival timestamp — not from the
-    * CSV layout's formatted string, whose hardcoded 'Z' suffix would
-    * re-parse as UTC and shift boundary rows into the wrong month on a
+    * partition derives from the TYPED arrival timestamp — not from a
+    * formatted date string, whose hardcoded 'Z' suffix would re-parse
+    * as UTC and shift boundary rows into the wrong month on a
     * non-UTC session.
     */
   def writeForensicTable(forensic: Dataset[ForensicReport], path: String): Unit =

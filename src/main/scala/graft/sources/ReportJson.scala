@@ -424,6 +424,28 @@ object ReportJson {
         f.resultType, f.sendingMtaIp.getOrElse(""), f.receivingIp.getOrElse("")))
     }
 
+  // ------------------------------------------------------- documents
+  /** The per-report document bytes for a format — one definition shared
+    * by the CLI's sinks and the o_cli_json/o_cli_csv distributed gate
+    * entries (DmarcIngest.cliDocs), so the CLI's output and its hash
+    * gate cannot drift apart. JSON: the MarshalIndent document; CSV: the
+    * per-file header + rows (the stream layout — output.go:616-700's
+    * directory headers are the same columns).
+    */
+  def renderDocument(p: ParsedReport, format: String): String =
+    if (format == "json") p match {
+      case ParsedAggregate(r) => aggregate(r)
+      case ParsedForensic(r)  => forensic(r)
+      case ParsedTls(r)       => smtpTls(r)
+    } else p match {
+      case ParsedAggregate(r) =>
+        (csvLine(AggregateCsvHeader) +: aggregateCsvRows(r).map(csvLine)).mkString
+      case ParsedForensic(r) =>
+        csvLine(ForensicCsvHeader) + csvLine(forensicCsvRow(r))
+      case ParsedTls(r) =>
+        (csvLine(TlsCsvHeader) +: tlsCsvRows(r).map(csvLine)).mkString
+    }
+
   // -------------------------------------------------- directory names
   /** `{type}_{20060102_150405}_{id}.{ext}` (output.go:generateFilename);
     * forensic ids are the first 8 bytes of sha256(message_id) in hex.

@@ -31,7 +31,11 @@ object ReportValidator {
     * the reference's error/warning split.
     */
   def validateAggregate(data: Array[Byte]): ValidationResult =
-    validateAggregateRaw(Extract.utf8(Extract.decompress(data)))
+    Extract.decode(data).fold(undecodable, validateAggregateRaw)
+
+  /** A payload whose compressed body is corrupt fails the audit. */
+  private def undecodable(err: String): ValidationResult =
+    ValidationResult(valid = false, Seq(err), Seq.empty)
 
   private def validateAggregateRaw(raw: String): ValidationResult = {
     val errors = Seq.newBuilder[String]
@@ -88,7 +92,7 @@ object ReportValidator {
     * the parser tolerates them but the report is degenerate.
     */
   def validateTlsJson(data: Array[Byte]): ValidationResult =
-    validateTlsJsonRaw(Extract.utf8(Extract.decompress(data)))
+    Extract.decode(data).fold(undecodable, validateTlsJsonRaw)
 
   private def validateTlsJsonRaw(raw: String): ValidationResult = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -151,10 +155,12 @@ object ReportValidator {
     * parse failure IS the audit error), everything else through the
     * aggregate-XML battery.
     */
-  def validateAny(data: Array[Byte]): (String, ValidationResult) = {
+  def validateAny(data: Array[Byte]): (String, ValidationResult) =
     // decode ONCE (decompress + utf8 are the per-file hot-path cost in
     // the distributed audit) and dispatch on the decoded string
-    val raw = Extract.utf8(Extract.decompress(data))
+    Extract.decode(data).fold(e => "aggregate" -> undecodable(e), validateDecoded(data, _))
+
+  private def validateDecoded(data: Array[Byte], raw: String): (String, ValidationResult) = {
     val head = raw.dropWhile(_.isWhitespace)
     // XML-shaped content is the aggregate family unconditionally: an
     // aggregate report whose field TEXT happens to contain
@@ -176,15 +182,9 @@ object ReportValidator {
     */
   def validateDirectory(spark: SparkSession, path: String, glob: String = "*"): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .option("recursiveFileLookup", "true")
-      .load(path)
-      .select("path", "content")
-      .as[(String, Array[Byte])]
-      .map { case (p, bytes) =>
-        val (family, r) = validateAny(bytes)
-        (p, family, r.valid, r.errors, r.warnings)
+    DmarcReader.parse(DmarcReader.files(spark, path, glob)) { f =>
+        val (family, r) = validateAny(f.content)
+        Some((f.path, family, r.valid, r.errors, r.warnings))
       }
       .toDF("path", "family", "valid", "errors", "warnings")
   }

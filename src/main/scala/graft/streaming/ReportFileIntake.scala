@@ -1,11 +1,10 @@
 package graft.streaming
 
 import graft.sources.{AggregateRecordRow, AggregateReport, AggregateXmlParser,
-  DmarcReader, ForensicParser, ForensicReport, TlsReport, TlsReportParser}
+  DmarcReader, ForensicReport, TlsReport}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
 
 /** Continuous intake of raw DMARC report FILES from a drop directory —
   * the Spark twin of the reference's IMAP poll loop
@@ -20,14 +19,7 @@ import org.apache.spark.sql.types._
   */
 object ReportFileIntake {
 
-  /** binaryFile's fixed schema (streaming sources require it up front). */
-  private val binarySchema = StructType(Seq(
-    StructField("path", StringType),
-    StructField("modificationTime", TimestampType),
-    StructField("length", LongType),
-    StructField("content", BinaryType)))
-
-  /** (path, content) stream of newly arrived report files.
+  /** Newly arrived report files, deduplicated by path.
     *
     * The watermarked path dedup guards a real hazard of mail-derived
     * filenames (the reference saves reports under their email subject —
@@ -37,39 +29,19 @@ object ReportFileIntake {
     * once the watermark passes a file's modification time + 1h, so it
     * stays bounded by recent-arrival count, not all-time file count.
     */
-  private def rawFileStream(spark: SparkSession, dropDir: String, glob: String,
-                            maxFilesPerTrigger: Int): DataFrame =
-    spark.readStream.format("binaryFile")
-      .schema(binarySchema)
-      .option("pathGlobFilter", glob)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .load(dropDir)
+  private def newFiles(spark: SparkSession, dropDir: String, glob: String): DataFrame =
+    DmarcReader.fileStream(spark, dropDir, glob)
       .withWatermark("modificationTime", "1 hour")
       .dropDuplicatesWithinWatermark("path")
 
-  def reportFileStream(spark: SparkSession, dropDir: String, glob: String = "*",
-                       maxFilesPerTrigger: Int = 64): DataFrame =
-    rawFileStream(spark, dropDir, glob, maxFilesPerTrigger)
-      .select(col("path"), col("content"))
-
-  /** Parsed aggregate reports from the drop directory; unparseable files
-    * are skipped (the reference logs and continues — parser.go:116-193).
-    */
-  def aggregateReportStream(spark: SparkSession, dropDir: String,
-                            glob: String = "*"): Dataset[AggregateReport] = {
-    import spark.implicits._
-    reportFileStream(spark, dropDir, glob).as[(String, Array[Byte])]
-      .flatMap { case (_, bytes) => AggregateXmlParser.parseAny(bytes).toOption }
-  }
-
   /** Flattened record rows (the `dmarc_aggregate_records` shape) as a
     * stream — ready to append to the same table the batch path fills.
+    * Unparseable files are skipped (the reference logs and continues —
+    * parser.go:116-193).
     */
   def aggregateRecordStream(spark: SparkSession, dropDir: String,
-                            glob: String = "*"): Dataset[AggregateRecordRow] = {
-    import spark.implicits._
-    aggregateReportStream(spark, dropDir, glob).flatMap(DmarcReader.recordRows)
-  }
+                            glob: String = "*"): Dataset[AggregateRecordRow] =
+    DmarcReader.parseRecords(newFiles(spark, dropDir, glob))
 
   /** Aggregate reports with mailbox-redelivery dedup: an IMAP mailbox
     * can deliver the same report repeatedly (cc'd copies, re-polls,
@@ -86,15 +58,8 @@ object ReportFileIntake {
     // dedup subsumes path dedup here — a double-listed path parses to
     // the same report id — and Spark allows only one watermark
     // definition per stateful chain
-    spark.readStream.format("binaryFile")
-      .schema(binarySchema)
-      .option("pathGlobFilter", glob)
-      .option("maxFilesPerTrigger", "64")
-      .load(dropDir)
-      .select(col("modificationTime"), col("content"))
-      .as[(java.sql.Timestamp, Array[Byte])]
-      .flatMap { case (mt, bytes) =>
-        AggregateXmlParser.parseAny(bytes).toOption.map(r => (mt, r))
+    DmarcReader.parse(DmarcReader.fileStream(spark, dropDir, glob)) { f =>
+        AggregateXmlParser.parseAny(f.content).toOption.map(r => (f.modificationTime, r))
       }
       .toDF("_arrival", "report")
       .withWatermark("_arrival", "1 hour")
@@ -103,24 +68,18 @@ object ReportFileIntake {
       .select("report.*").as[AggregateReport]
   }
 
-  /** Forensic (ARF email) twin of `aggregateReportStream` — the IMAP
+  /** Forensic (ARF email) twin of `aggregateRecordStream` — the IMAP
     * poll also delivers forensic reports; same drop-directory source,
     * same executor-side parser as the batch path.
     */
   def forensicReportStream(spark: SparkSession, dropDir: String,
-                           glob: String = "*"): Dataset[ForensicReport] = {
-    import spark.implicits._
-    reportFileStream(spark, dropDir, glob).as[(String, Array[Byte])]
-      .flatMap { case (_, bytes) => ForensicParser.parse(bytes).toOption }
-  }
+                           glob: String = "*"): Dataset[ForensicReport] =
+    DmarcReader.parseForensic(newFiles(spark, dropDir, glob))
 
   /** SMTP TLS (RFC 8460 JSON) twin. */
   def tlsReportStream(spark: SparkSession, dropDir: String,
-                      glob: String = "*"): Dataset[TlsReport] = {
-    import spark.implicits._
-    reportFileStream(spark, dropDir, glob).as[(String, Array[Byte])]
-      .flatMap { case (_, bytes) => TlsReportParser.parseAny(bytes).toOption }
-  }
+                      glob: String = "*"): Dataset[TlsReport] =
+    DmarcReader.parseTls(newFiles(spark, dropDir, glob))
 
   /** The full ingest loop: drop directory → parse → append-mode parquet
     * records table. Each file is processed exactly once across restarts

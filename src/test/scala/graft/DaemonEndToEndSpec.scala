@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   */
 class DaemonEndToEndSpec extends SparkSpec {
 
-  private val Samples = "/root/reference/samples"
+  private val Samples = operators.DmarcIngest.Samples
 
   test("mail over IMAP -> daemon -> Spark parse -> ClickHouse wire -> HTTP summary") {
     // seed a real IMAP server with two aggregate reports as mail

@@ -9,7 +9,7 @@ import java.nio.file.{Files, Paths}
   */
 class DmarcParserSpec extends AnyFunSuite {
 
-  private val samples = "/root/reference/samples"
+  private val samples = operators.DmarcIngest.Samples
   private def bytes(p: String): Array[Byte] = Files.readAllBytes(Paths.get(p))
 
   private val minimalXml =

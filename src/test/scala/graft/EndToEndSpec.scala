@@ -7,17 +7,18 @@ import org.apache.spark.sql.functions._
 
 /** The complete user story in one pass — what a parsedmarc-go deployment
   * does daily, on Spark: ingest raw report files → flatten to the record
-  * table → persist month/org-partitioned parquet → run the dashboard
-  * queries off the store with partition pruning.
+  * table → persist month-partitioned parquet sorted on the (org,
+  * report, ip, date) key → run the dashboard queries off the store
+  * with partition pruning.
   */
 class EndToEndSpec extends SparkSpec {
 
   test("ingest -> partitioned store -> dashboard analytics round-trip") {
     val dir = Files.createTempDirectory("graft-e2e").toString
-    val records = DmarcReader.aggregateRecords(spark, "/root/reference/samples/aggregate")
+    val records = DmarcReader.aggregateRecords(spark, s"${operators.DmarcIngest.Samples}/aggregate")
 
     // store (the ClickHouse-table equivalent)
-    OutputWriters.writeDirectoryMode(records, s"$dir/records")
+    OutputWriters.writeRecordsTable(records, s"$dir/records")
     val stored = spark.read.parquet(s"$dir/records")
 
     // dashboards off the store match dashboards off the in-flight data
@@ -45,7 +46,7 @@ class EndToEndSpec extends SparkSpec {
 
   test("writeRecordsTable: MergeTree-parity layout (month partitions, sorted files)") {
     val dir = Files.createTempDirectory("graft-table").toString
-    val records = DmarcReader.aggregateRecords(spark, "/root/reference/samples/aggregate")
+    val records = DmarcReader.aggregateRecords(spark, s"${operators.DmarcIngest.Samples}/aggregate")
     OutputWriters.writeRecordsTable(records, s"$dir/t")
 
     // month partition directories exist and a month filter prunes
@@ -75,9 +76,9 @@ class EndToEndSpec extends SparkSpec {
   test("all five reference tables materialize in their MergeTree layouts") {
     import graft.api.TlsAnalytics
     val dir = Files.createTempDirectory("graft-tables").toString
-    val reports = DmarcReader.aggregateReports(spark, "/root/reference/samples/aggregate")
-    val forensic = DmarcReader.forensicReports(spark, "/root/reference/samples/forensic", "*.eml")
-    val tls = DmarcReader.tlsReports(spark, "/root/reference/samples/smtp_tls")
+    val reports = DmarcReader.aggregateReports(spark, s"${operators.DmarcIngest.Samples}/aggregate")
+    val forensic = DmarcReader.forensicReports(spark, s"${operators.DmarcIngest.Samples}/forensic", "*.eml")
+    val tls = DmarcReader.tlsReports(spark, s"${operators.DmarcIngest.Samples}/smtp_tls")
 
     OutputWriters.writeReportsTable(reports, s"$dir/reports")
     OutputWriters.writeForensicTable(forensic, s"$dir/forensic")

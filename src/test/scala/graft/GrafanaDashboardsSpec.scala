@@ -14,7 +14,7 @@ import org.json4s.jackson.JsonMethods
   */
 class GrafanaDashboardsSpec extends SparkSpec {
 
-  private val RefDir = "/root/reference/grafana/clickhouse"
+  private val RefDir = s"${operators.DmarcIngest.Reference}/grafana/clickhouse"
 
   private def refDashboard(file: String): JValue =
     JsonMethods.parse(java.nio.file.Files.readString(
@@ -55,7 +55,7 @@ class GrafanaDashboardsSpec extends SparkSpec {
   }
 
   private lazy val viewsReady: Unit = GrafanaDashboards.registerViews(
-    spark, "/root/reference/samples/aggregate", "/root/reference/samples/forensic")
+    spark, s"${operators.DmarcIngest.Samples}/aggregate", s"${operators.DmarcIngest.Samples}/forensic")
 
   test("all 18 panel queries run as Spark SQL over the sample corpus") {
     viewsReady

@@ -4,7 +4,8 @@ import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.file.{Files, Paths}
 
 import graft.GraftCli._
-import graft.sources.{GraftConfig, HttpSettings, ImapSettings, InMemoryImap, ImapIntake, ReportJson}
+import graft.sources.{GraftConfig, HttpSettings, ImapSettings, InMemoryImap, ImapIntake,
+  ParsedReport, ReportJson}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The CLI entry point (cmd/parsedmarc-go/main.go) and its output
@@ -16,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class GraftCliSpec extends AnyFunSuite {
 
-  private val Samples = "/root/reference/samples"
+  private val Samples = operators.DmarcIngest.Samples
 
   private def runCli(args: String*): (Int, String, String) = {
     val out = new ByteArrayOutputStream()
@@ -173,6 +174,43 @@ class GraftCliSpec extends AnyFunSuite {
     assert(err.toString("UTF-8").contains("unable to parse data as any supported report type"))
   }
 
+  test("CSV documents: output.go column layouts; TLS fans out one row per failure detail") {
+    import DmarcFixtures._
+    def csv(doc: String): Seq[String] =
+      ReportJson.renderDocument(ParsedReport.parseAny(utf8(doc)).toOption.get, "csv")
+        .split("\n").toSeq
+    val agg = csv(AggregateXml)
+    assert(agg.head == "report_id,org_name,org_email,begin_date,end_date,domain," +
+      "policy_adkim,policy_aspf,policy_p,policy_sp,policy_pct,source_ip,source_country," +
+      "source_reverse_dns,count,disposition,dkim_result,spf_result,dmarc_aligned," +
+      "header_from,envelope_from,dkim_domain,dkim_selector,spf_domain")
+    // dkim_result/spf_result are the policy-evaluated results, not the
+    // first auth result (the auth spf result here is softfail)
+    assert(agg.tail == Seq(
+      "fixture-agg-1,receiver.example,noreply@receiver.example,2024-01-01T00:00:00Z," +
+        "2024-01-01T23:59:59Z,example.com,r,r,none,none,100,192.0.2.10,Unknown,,3,none," +
+        "pass,fail,true,example.com,,example.com,s1,bounce.example.com",
+      "fixture-agg-1,receiver.example,noreply@receiver.example,2024-01-01T00:00:00Z," +
+        "2024-01-01T23:59:59Z,example.com,r,r,none,none,100,198.51.100.7,Unknown,,1," +
+        "quarantine,fail,fail,false,example.com,other.example,,,other.example"))
+    val arf = csv(ArfEml)
+    assert(arf.head == "feedback_type,user_agent,version,original_envelope_id," +
+      "original_mail_from,original_rcpt_to,arrival_date,subject,message_id," +
+      "authentication_results,dkim_domain,source_ip,source_country,delivery_result," +
+      "auth_failure,reported_domain")
+    assert(arf.size == 2 && arf(1).startsWith("auth-failure,fixture/1.0,1,,<bounce@example.com>,,"))
+    assert(arf(1).endsWith(",192.0.2.10,Unknown,reject,dmarc,example.com"))
+    val tls = csv(TlsJson)
+    assert(tls.head == "organization_name,begin_date,end_date,contact_info,report_id," +
+      "policy_domain,policy_type,successful_session_count,failed_session_count," +
+      "failure_result_type,failure_sending_mta_ip,failure_receiving_ip")
+    val base = "Receiver Mail,2024-01-01T00:00:00Z,2024-01-01T23:59:59Z,tls@receiver.example,fixture-tls-1,"
+    assert(tls.tail == Seq(
+      base + "example.com,sts,100,3,certificate-expired,192.0.2.20,",
+      base + "example.com,sts,100,3,starttls-not-supported,192.0.2.21,203.0.113.5",
+      base + "example.org,no-policy-found,50,0,,,"))
+  }
+
   // ------------------------------------------------------ file append
   test("append-file sink: two runs append like the reference's O_APPEND") {
     val f = Files.createTempFile("cli-out", ".json")
@@ -277,7 +315,7 @@ class GraftCliSpec extends AnyFunSuite {
         hosts = Seq(s"127.0.0.1:${broker.port}"), aggregateTopic = "")
       val sender = new KafkaReportSender(settings)
       val bytes = Files.readAllBytes(Paths.get(s"$Samples/aggregate/empty_reason.xml"))
-      sender.send(parseAny(bytes).toOption.get)
+      sender.send(ParsedReport.parseAny(bytes).toOption.get)
       sender.close()
       // nothing produced: the broker never saw the topic at all
       val e = intercept[java.io.IOException] {

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   */
 class HttpIntakeSpec extends SparkSpec {
 
-  private val Samples = "/root/reference/samples"
+  private val Samples = operators.DmarcIngest.Samples
   private val client = HttpClient.newHttpClient()
 
   private def get(port: Int, path: String): HttpResponse[String] =
@@ -91,6 +91,17 @@ class HttpIntakeSpec extends SparkSpec {
       val bad = post(port, "/dmarc/report", "not a report".getBytes, "application/xml")
       assert(bad.statusCode() == 400)
       assert(bad.body().contains("Failed to parse"))
+      // details: the joined per-family reasons, without the CLI's sentence
+      assert(bad.body().contains(""""details":"aggregate: no aggregate report found in email; """ +
+        """forensic: no feedback report found; smtp_tls: no SMTP TLS report found""""), bad.body())
+      // a gzip with valid magic and a truncated body is a parse error, not a 500
+      val corrupt = post(port, "/dmarc/report", DmarcFixtures.truncatedGzip, "application/gzip")
+      assert(corrupt.statusCode() == 400, corrupt.body())
+      assert(corrupt.body().contains("invalid compressed data"), corrupt.body())
+      // ... also when the cut body holds a blank line (the forensic
+      // parser's plain-text fallback must never see the raw bytes)
+      val stored = post(port, "/dmarc/report", DmarcFixtures.truncatedStoredGzip, "application/gzip")
+      assert(stored.statusCode() == 400, stored.body())
       assert(get(port, "/dmarc/report").statusCode() == 405)
       // the read-only routes are GET-only: POST/PUT answer 405, not 200
       for (p <- Seq("/health", "/metrics", "/summary", "/"))

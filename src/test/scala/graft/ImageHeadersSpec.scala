@@ -32,7 +32,7 @@ class ImageHeadersSpec extends SparkSpec {
     import spark.implicits._
     val files = spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.png")
-      .load("/root/reference/grafana")
+      .load(s"${operators.DmarcIngest.Reference}/grafana")
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .collect()

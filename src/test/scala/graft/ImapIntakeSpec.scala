@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   */
 class ImapIntakeSpec extends SparkSpec {
 
-  private val Samples = "/root/reference/samples/aggregate"
+  private val Samples = s"${operators.DmarcIngest.Samples}/aggregate"
 
   private def sampleBytes(name: String): Array[Byte] =
     Files.readAllBytes(Paths.get(s"$Samples/$name"))

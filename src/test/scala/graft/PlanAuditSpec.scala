@@ -115,14 +115,27 @@ class PlanAuditSpec extends SparkSpec {
     * scan of the checkpoint and the sweep would be vacuous for exactly
     * the self-join-heavy queries it most needs to cover. Also avoids
     * executing every pipeline just to read its plan.
+    *
+    * Each plan builds under its own Try, so one entry that cannot build
+    * neither stops the audit of the rest nor passes: the sweep fails
+    * once, naming every plan that matches `offends` and every entry
+    * whose plan did not build.
     */
-  private def sweepPlans(names: Seq[String]): Seq[(String, String)] =
-    graft.operators.Materialize.lazily {
+  private def sweep(names: Seq[String], what: String)(offends: String => Boolean): Unit = {
+    val plans = graft.operators.Materialize.lazily {
       names.map { name =>
-        name -> SparkEntry.queries(name)(spark, sfDir)
-          .queryExecution.executedPlan.toString
+        name -> scala.util.Try(SparkEntry.queries(name)(spark, sfDir)
+          .queryExecution.executedPlan.toString)
       }
     }
+    val offenders = plans.collect { case (name, scala.util.Success(p)) if offends(p) => name }
+    val unbuilt = plans.collect { case (name, scala.util.Failure(e)) =>
+      s"$name (${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(160)})"
+    }
+    if (offenders.nonEmpty || unbuilt.nonEmpty)
+      fail(s"$what in: ${offenders.mkString(", ")}\n" +
+        s"plans that failed to build (${unbuilt.size}):\n${unbuilt.mkString("\n")}")
+  }
 
   test("no CartesianProduct anywhere in the registry") {
     // broadcast-bounded scoring crossJoins compile to
@@ -130,10 +143,7 @@ class PlanAuditSpec extends SparkSpec {
     // unhinted cross join slipped in — fail the build, name the query
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filterNot(streamingEntries).filterNot(eagerComposites)
-    val offenders = sweepPlans(names).collect {
-      case (name, p) if p.contains("CartesianProduct") => name
-    }
-    assert(offenders.isEmpty, s"cartesian in: ${offenders.mkString(", ")}")
+    sweep(names, "cartesian")(_.contains("CartesianProduct"))
   }
 
   test("BroadcastNestedLoopJoin appears only on intended scoring paths") {
@@ -169,10 +179,7 @@ class PlanAuditSpec extends SparkSpec {
       "t_wimbd_stats")
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filterNot(allowed).filterNot(streamingEntries).filterNot(eagerComposites)
-    val offenders = sweepPlans(names).collect {
-      case (name, p) if p.contains("BroadcastNestedLoopJoin") => name
-    }
-    assert(offenders.isEmpty, s"nested-loop join in: ${offenders.mkString(", ")}")
+    sweep(names, "nested-loop join")(_.contains("BroadcastNestedLoopJoin"))
   }
 
   test("q6 is a pure pushed-down scan+agg: no join, filters reach parquet") {

@@ -51,7 +51,7 @@ class PngPixelsSpec extends SparkSpec {
     import spark.implicits._
     val files = spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.png")
-      .load("/root/reference/grafana")
+      .load(s"${operators.DmarcIngest.Reference}/grafana")
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .collect()

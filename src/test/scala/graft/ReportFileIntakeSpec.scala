@@ -11,7 +11,7 @@ import graft.streaming.ReportFileIntake
   */
 class ReportFileIntakeSpec extends SparkSpec {
 
-  private val samples = "/root/reference/samples/aggregate"
+  private val samples = s"${operators.DmarcIngest.Samples}/aggregate"
 
   private def copyIn(drop: Path, name: String): Unit =
     Files.copy(java.nio.file.Paths.get(samples, name), drop.resolve(name),
@@ -57,16 +57,16 @@ class ReportFileIntakeSpec extends SparkSpec {
       spark.table(name).count()
     }
     val nF = drain(ReportFileIntake.forensicReportStream(
-      spark, "/root/reference/samples/forensic", "*.eml").toDF(),
+      spark, s"${operators.DmarcIngest.Samples}/forensic", "*.eml").toDF(),
       s"st_forensic_${System.nanoTime()}")
     assert(nF == DmarcReader.forensicReports(
-      spark, "/root/reference/samples/forensic", "*.eml").count() && nF > 0)
+      spark, s"${operators.DmarcIngest.Samples}/forensic", "*.eml").count() && nF > 0)
     val nT = drain(ReportFileIntake.tlsReportStream(
-      spark, "/root/reference/samples/smtp_tls").toDF()
+      spark, s"${operators.DmarcIngest.Samples}/smtp_tls").toDF()
         .selectExpr("reportId", "organizationName", "size(policies) AS n_policies"),
       s"st_tls_${System.nanoTime()}")
     assert(nT == DmarcReader.tlsReports(
-      spark, "/root/reference/samples/smtp_tls").count() && nT > 0)
+      spark, s"${operators.DmarcIngest.Samples}/smtp_tls").count() && nT > 0)
   }
 
   test("redelivered reports (same id, different files) collapse to one copy") {

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class ReportValidatorSpec extends AnyFunSuite {
 
-  private val samples = "/root/reference/samples"
+  private val samples = operators.DmarcIngest.Samples
   private def bytes(p: String) = Files.readAllBytes(Paths.get(p))
 
   test("valid sample report passes validation") {
@@ -92,7 +92,7 @@ class ReportValidatorSpec extends AnyFunSuite {
 class ReportValidatorSparkSpec extends SparkSpec {
   test("distributed archive audit flags exactly the bad files") {
     val df = ReportValidator.validateDirectory(
-      spark, "/root/reference/samples/aggregate", "*.xml").cache()
+      spark, s"${operators.DmarcIngest.Samples}/aggregate", "*.xml").cache()
     val bad = df.filter(!org.apache.spark.sql.functions.col("valid"))
       .select("path").collect().map(_.getString(0)).toSet
     assert(bad.exists(_.contains("invalid_xml.xml")))

@@ -9,7 +9,7 @@ import graft.sources.DmarcReader
 class TlsAnalyticsSpec extends SparkSpec {
 
   private lazy val reports =
-    DmarcReader.tlsReports(spark, "/root/reference/samples/smtp_tls")
+    DmarcReader.tlsReports(spark, s"${operators.DmarcIngest.Samples}/smtp_tls")
 
   test("tlsReportRows: one row per report×policy, ClickHouse column set") {
     val rows = tlsReportRows(reports)
